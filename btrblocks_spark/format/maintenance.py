@@ -421,9 +421,9 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
     from btrblocks_spark.format.writer import (
         _observed_or_readback_totals,
         _plan_partition_fn,
-        _PLAN_CONF_LOCK,
         _PLAN_SCHEMA,
         _stage_by_chunk,
+        plan_read_window,
     )
     from btrblocks_spark.format.chunker import with_chunk_id
 
@@ -553,30 +553,10 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
             .parquet(tmp_dir)
         )
 
-        # re-plan the rewritten tail only (footer-cheap for the kept prefix).
-        # maxPartitionBytes is raised past the largest file so one read task
-        # sees each chunk whole — a split chunk would emit duplicate plan
-        # rows (same guard as write_table).
-        max_file = max(
-            (
-                os.path.getsize(os.path.join(r, f))
-                for r, _s, fs in os.walk(tmp_dir)
-                for f in fs
-                if f.endswith(".parquet")
-            ),
-            default=1,
-        )
-        # same lock as write_table's plan window (ADVICE r8 #3): the conf is
-        # session-global, and a compact overlapping a concurrent write_table
-        # (a supported pattern since the bench staging overlap) must not
-        # interleave set/restore — a clobbered window could split a chunk
-        # file across read partitions and emit duplicate plan rows.
-        _PLAN_CONF_LOCK.acquire()
-        prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", str(max_file + (1 << 20))
-        )
-        try:
+        # re-plan the rewritten tail only (footer-cheap for the kept prefix),
+        # inside write_table's plan read window: each chunk file stays whole
+        # in one read task, and it serializes against concurrent writes.
+        with plan_read_window(spark, tmp_dir):
             planned_df = (
                 spark.read.parquet(tmp_dir)
                 .withColumn("_chunk", F.floor(F.col("_idx") / F.lit(bs)).cast("long"))
@@ -621,9 +601,6 @@ def compact(spark: SparkSession, path: str, config=None) -> dict:
                 .option("compression", "zstd")
                 .parquet(stats_tmp)
             )
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-            _PLAN_CONF_LOCK.release()
 
         # 0-row edge (empty metrics row) falls back to a read-back agg —
         # see writer._observed_or_readback_totals

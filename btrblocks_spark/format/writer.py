@@ -15,9 +15,11 @@ O(num_chunks · num_columns) small rows):
      files split on exact chunk boundaries (one file = one chunk — the
      ColumnPart sizing analog, storage/Chunk.cpp:233-266), ZSTD pages.
   4. plan: ``mapInPandas`` over the WRITTEN files — each chunk is exactly
-     one file, so the read-back streams whole chunks with no shuffle,
-     holds one chunk in memory, computes per-column stats (T1/T2) and runs
-     the scheme planner on a run-preserving sample. Planning from the
+     one file, and the read window (``plan_read_window``) never splits a
+     file while packing about one read partition per core, so the read-back
+     streams whole chunks with no shuffle, holds one chunk in memory,
+     computes per-column stats (T1/T2) and runs the scheme planner on a
+     run-preserving sample. Planning from the
      written table (not a staging copy) means (a) no DISK_ONLY staging
      persist — at scale that saved round-trip is a full extra raw-data
      write+read — and (b) the plan reads zstd-compressed columns, and
@@ -38,6 +40,7 @@ codec-agnostic.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import threading
@@ -196,12 +199,15 @@ def _plan_partition_fn(
     config: BtrBlocksConfig,
     group_deps: dict[str, str] | None = None,
 ):
-    """mapInPandas kernel: stream Arrow batches of a chunk-staged partition
-    (ascending ``_idx`` ⇒ ascending ``_chunk``, each chunk contiguous),
-    flushing one chunk's plan at a time — memory stays O(block_size) however
-    many chunks a partition holds. ``group_deps`` maps column-group
-    dependent columns to their determinant (those columns skip the scheme
-    cascade — they are stored as a mapping table, not a stream)."""
+    """mapInPandas kernel: stream Arrow batches of a partition in which each
+    chunk's rows are contiguous (a chunk-staged partition, or several whole
+    chunk files read one after another — in any chunk order), flushing one
+    chunk's plan at a time — memory stays O(block_size) however many chunks
+    a partition holds. Groups keep arrival order (``sort=False``): a batch
+    can hold the tail of chunk 7 and then chunk 3, and sorting would flush
+    a partial chunk 7. ``group_deps`` maps column-group dependent columns
+    to their determinant (those columns skip the scheme cascade — they are
+    stored as a mapping table, not a stream)."""
 
     def plan_stream(batches):
         buf: list[pd.DataFrame] = []
@@ -209,7 +215,7 @@ def _plan_partition_fn(
         for pdf in batches:
             if not len(pdf):
                 continue
-            for ck, g in pdf.groupby("_chunk", sort=True):
+            for ck, g in pdf.groupby("_chunk", sort=False):
                 if cur is None:
                     cur = ck
                 elif ck != cur:
@@ -253,9 +259,57 @@ def plan_chunks(
 
 _GROUPS_DIR = "_btr_column_groups"
 
-# serializes the session-global maxPartitionBytes window of the plan pass
-# so independent write_table calls can run concurrently (see its use)
+# serializes the session-global read confs of the plan pass so write_table
+# and compact calls can run concurrently (see plan_read_window)
 _PLAN_CONF_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
+def plan_read_window(spark, data_path: str):
+    """Session read confs under which a scan of ``data_path`` (one chunk per
+    file) keeps every chunk file whole in one read partition while packing
+    about one partition per core. Every plan pass over written chunk files
+    runs inside this window: a split chunk would emit duplicate plan rows.
+
+    Spark sizes a file scan's splits as ``min(maxPartitionBytes,
+    max(openCostInBytes, totalBytes / defaultParallelism))`` with
+    ``totalBytes = sum(size + openCostInBytes)``. With ``openCostInBytes``
+    = the largest file and ``maxPartitionBytes`` >= ``totalBytes``, a split
+    is never smaller than the largest file (no chunk is split), and the
+    per-core term packs the files into about ``defaultParallelism``
+    partitions.
+
+    Why pack: a Python task costs a fixed ~0.25-0.3 CPU s on PySpark 4.1 /
+    Python 3.11 whatever its work (measured on a 4-core host: the worker's
+    per-task ``importlib.invalidate_caches()`` re-reads every zip importer
+    on its path), so one task per chunk file spent more CPU on task set-up
+    than on planning. The DataSource scan packs for the same reason
+    (``sources.btr_datasource._pack_files``).
+
+    The confs are session-global: concurrent write_table/compact calls
+    (guide §2.6 — callers overlap independent table writes to back-fill
+    each other's stage tails) must not interleave set/restore, so the lock
+    serializes the window; the heavy chunk/exchange/parquet work before it
+    overlaps freely. File sizes come from the fs abstraction: os.walk
+    locally, a Hadoop LIST on object-store URIs — metadata-only either
+    way."""
+    sizes = _fs.list_file_sizes(data_path, ".parquet", spark)
+    max_file = max(sizes, default=1)
+    total = sum(sizes) + len(sizes) * max_file
+    window = {
+        "spark.sql.files.openCostInBytes": max_file,
+        "spark.sql.files.maxPartitionBytes": max(total, max_file),
+    }
+    conf = spark.conf
+    with _PLAN_CONF_LOCK:
+        prev = {k: conf.get(k) for k in window}
+        try:
+            for k, v in window.items():
+                conf.set(k, str(v))
+            yield
+        finally:
+            for k, v in prev.items():
+                conf.set(k, v)
 
 
 def _observed_or_readback_totals(obs, spark, stats_path: str) -> tuple[int, int]:
@@ -640,26 +694,12 @@ def write_table(
         # failed write_table (ADVICE r8 #2)
         _map_pool.shutdown(wait=True)
 
-    # plan over the WRITTEN table: every chunk is exactly one file. Setting
-    # maxPartitionBytes to just above the largest file keeps every chunk
-    # whole in one read partition (splitting would emit duplicate plan rows)
-    # while still fanning chunks out across tasks — no shuffle, no staging
-    # copy, and the plan reads the compressed bytes a reader will see.
-    # file sizes via the fs abstraction: os.walk locally, a Hadoop LIST on
-    # object-store URIs (S7) — metadata-only either way
-    max_file = max(_fs.list_file_sizes(data_path, ".parquet", spark), default=1)
+    # plan over the WRITTEN table: every chunk is exactly one file, and the
+    # read window packs whole files into about one read partition per core
+    # — no shuffle, no staging copy, and the plan reads the compressed
+    # bytes a reader will see.
     stats_path = _fs.join(path, "_btr_chunk_stats")
-    spark_conf = spark.conf
-    # maxPartitionBytes is SESSION-global: concurrent write_table calls
-    # (guide §2.6 — callers overlap independent table writes to back-fill
-    # each other's stage tails) must not interleave set/restore or one
-    # write's plan could split a chunk file across two read partitions and
-    # emit duplicate plan rows. The lock serializes only this plan window;
-    # the heavy chunk/exchange/parquet work above overlaps freely.
-    _PLAN_CONF_LOCK.acquire()
-    prev_mpb = spark_conf.get("spark.sql.files.maxPartitionBytes")
-    spark_conf.set("spark.sql.files.maxPartitionBytes", str(max_file + (1 << 20)))
-    try:
+    with plan_read_window(spark, data_path):
         written = (
             spark.read.parquet(data_path)
             .withColumn(
@@ -669,8 +709,8 @@ def write_table(
             .drop("_idx")
         )
         # reconstruct group dependents for the stats pass (broadcast
-        # null-safe joins — narrow, so the one-file-per-partition chunk
-        # alignment the mapInPandas kernel relies on is preserved), so the
+        # null-safe joins — narrow, so the whole-chunk-per-file contiguity
+        # the mapInPandas kernel relies on is preserved), so the
         # sidecar carries full chunk stats for EVERY logical column and
         # zone-map pruning on a dependent works exactly as for stored ones
         for g in groups:
@@ -743,9 +783,6 @@ def write_table(
             .option("compression", "zstd")
             .parquet(stats_path)
         )
-    finally:
-        spark_conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-        _PLAN_CONF_LOCK.release()
 
     total_raw, total_est = _observed_or_readback_totals(obs, spark, stats_path)
     metadata = {

@@ -491,9 +491,9 @@ FROM orders GROUP BY o_orderstatus
 def format_datasource_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full engine loop through the registered data source: write orders
     with the chunked writer, read it back via
-    ``spark.read.format("btrblocks")`` (sidecar schema, task-per-chunk,
-    footer pruning), aggregate — the result must equal the same aggregate
-    over the raw table (DuckDB oracle). This is S4→S5 (csvtobtr→btrtocsv)
+    ``spark.read.format("btrblocks")`` (sidecar schema, chunk-file
+    partitions, footer pruning), aggregate — the result must equal the
+    same aggregate over the raw table (DuckDB oracle). This is S4→S5 (csvtobtr→btrtocsv)
     as one oracle-checked query, with the read side going through the
     DataSource contract instead of a plain parquet scan."""
     import shutil

@@ -33,15 +33,6 @@ from btrblocks_spark.queries import register
 from btrblocks_spark.tables import load_table
 
 
-def _dec(c, prec: int = 18, scale: int = 4):
-    return F.col(c).cast(f"decimal({prec},{scale})")
-
-
-def _dsum(c, prec: int = 18, scale: int = 4):
-    """Exact decimal sum of a double column, returned as DOUBLE."""
-    return F.sum(_dec(c, prec, scale)).cast("double")
-
-
 def _xsum(c, scale: int = 10000):
     """Exact order-independent sum of a double expression via scaled longs:
     round(x * scale) is the same IEEE multiply + half-away-from-zero round

@@ -12,9 +12,11 @@ Design (mirrors the reference's read path, compression/BtrReader.cpp):
   - schema comes from the metadata sidecar (the btr ``metadata`` file
     analog) — not file inference, the declared schema of the written
     relation; the internal ``_idx`` column never surfaces.
-  - one InputPartition per chunk FILE (the writer emits one file per
-    block_size chunk) → scan parallelism = chunk count, exactly the
-    reference's parallel-decompress shape (decompression-speed.cpp:40-64).
+  - chunk files (the writer emits one file per block_size chunk) are
+    packed into at most one InputPartition per core, balanced by file
+    bytes — the reference packs chunks into file-sized ColumnParts and
+    decompresses them on a thread pool (storage/Chunk.cpp:233-242), never
+    one scheduling unit per chunk (see ``_pack_files``).
   - ``pushFilters`` prunes whole chunk files from the parquet FOOTER
     min/max statistics of the filtered column — metadata-only reads, no
     data IO for excluded chunks (the chunk-stats skipping the sidecar
@@ -24,8 +26,8 @@ Design (mirrors the reference's read path, compression/BtrReader.cpp):
   - ``read`` yields Arrow record batches (pyarrow), so rows stream
     through the Python worker in columnar form.
 
-Scale: at 100 TB the partition list is one entry per chunk file; listing
-and footer pruning are O(files) driver-side metadata work, and every data
+Scale: at 100 TB listing and footer pruning are O(files) driver-side
+metadata work, the partition list is one entry per core, and every data
 byte moves only inside executor tasks. For the JVM-native fast path a
 plain ``spark.read.parquet(dir/"data")`` remains available (reader.
 read_table); this source adds the format-aware contract on top.
@@ -33,6 +35,7 @@ read_table); this source adds the format-aware contract on top.
 
 from __future__ import annotations
 
+import heapq
 import os
 from dataclasses import dataclass
 
@@ -50,26 +53,48 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from btrblocks_spark.format.fs import list_parquet_files
 from btrblocks_spark.format.reader import read_metadata
 
 
 @dataclass
 class ChunkFilePartition(InputPartition):
-    file_path: str
+    files: tuple
     columns: tuple
     # column-group reconstruction payload: ((det, dep, mapping_dir), ...)
     # for requested dependents — empty for ungrouped tables
     groups: tuple = ()
 
 
-def _read_batches_reconstructed(file_path: str, columns: tuple, groups: tuple):
-    """Stream a chunk file's Arrow batches, reconstructing column-group
-    dependents (write_table stores them as mapping tables, not streams):
-    per dependent, ``pc.index_in`` the determinant against the mapping's
-    det column (null matches null — Arrow's set lookup is null-safe) and
-    ``take`` the dep column — a vectorized dictionary lookup per batch,
-    never a per-row Python loop. Mapping tables load once per task (they
-    are capped at ``max_group_entries`` by the writer)."""
+def _pack_files(files: list, n_bins: int) -> list[tuple]:
+    """Pack chunk files into ``min(len(files), n_bins)`` bins balanced by
+    file bytes: each file, largest first, goes to the lightest bin (ties to
+    the lower bin). Every file lands in exactly one bin; each bin lists its
+    files in path order. One bin per core keeps full scan parallelism and
+    pays the fixed per-Python-task cost (see ``writer.plan_read_window``)
+    once per core instead of once per chunk file."""
+    n = min(len(files), n_bins)
+    if n <= 0:
+        return []
+    sized = sorted(((os.path.getsize(f), f) for f in files), key=lambda t: (-t[0], t[1]))
+    heap = [(0, i) for i in range(n)]
+    bins: list[list[str]] = [[] for _ in range(n)]
+    for size, f in sized:
+        load, i = heapq.heappop(heap)
+        bins[i].append(f)
+        heapq.heappush(heap, (load + size, i))
+    return [tuple(sorted(b)) for b in bins]
+
+
+def _read_batches_reconstructed(files: tuple, columns: tuple, groups: tuple):
+    """Stream the chunk files' Arrow batches in order, reconstructing
+    column-group dependents (write_table stores them as mapping tables, not
+    streams): per dependent, ``pc.index_in`` the determinant against the
+    mapping's det column (null matches null — Arrow's set lookup is
+    null-safe) and ``take`` the dep column — a vectorized dictionary lookup
+    per batch, never a per-row Python loop. Mapping tables load once per
+    partition, not per file (they are capped at ``max_group_entries`` by
+    the writer)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -79,24 +104,25 @@ def _read_batches_reconstructed(file_path: str, columns: tuple, groups: tuple):
         [c for c in columns if c not in deps]
         + [deps[c][0] for c in columns if c in deps]
     ))
-    maps = {
-        dep: pq.read_table(mdir) for dep, (_det, mdir) in deps.items()
-    }
-    pf = pq.ParquetFile(file_path)
-    for batch in pf.iter_batches(columns=read_cols):
-        arrays = []
-        for c in columns:
-            if c in deps:
-                det, _mdir = deps[c]
-                m = maps[c]
-                idx = pc.index_in(
-                    batch.column(batch.schema.get_field_index(det)),
-                    value_set=m.column(det).combine_chunks(),
-                )
-                arrays.append(pc.take(m.column(c).combine_chunks(), idx))
-            else:
-                arrays.append(batch.column(batch.schema.get_field_index(c)))
-        yield pa.RecordBatch.from_arrays(arrays, names=list(columns))
+    maps = {}
+    for dep, (det, mdir) in deps.items():
+        m = pq.read_table(mdir)
+        maps[dep] = (m.column(det).combine_chunks(), m.column(dep).combine_chunks())
+    for file_path in files:
+        pf = pq.ParquetFile(file_path)
+        for batch in pf.iter_batches(columns=read_cols):
+            arrays = []
+            for c in columns:
+                if c in deps:
+                    det_values, dep_values = maps[c]
+                    idx = pc.index_in(
+                        batch.column(batch.schema.get_field_index(deps[c][0])),
+                        value_set=det_values,
+                    )
+                    arrays.append(pc.take(dep_values, idx))
+                else:
+                    arrays.append(batch.column(batch.schema.get_field_index(c)))
+            yield pa.RecordBatch.from_arrays(arrays, names=list(columns))
 
 
 def _footer_range(pq_meta, col_name: str):
@@ -191,11 +217,20 @@ def _groups_payload(path: str, columns: tuple) -> tuple:
 
 
 class BtrBlocksReader(DataSourceReader):
+    """Batch reader. Option ``numPartitions`` caps the scan's partition
+    count (``load_btr_table`` passes the session's default parallelism —
+    this reader runs in a planner worker with no SparkContext to ask);
+    without it every kept chunk file is its own partition."""
+
     def __init__(self, options: dict, schema_fields: list[str]):
         self.path = options["path"]
         self.data_dir = os.path.join(self.path, "data")
         self.columns = tuple(schema_fields)
         self.groups = _groups_payload(self.path, self.columns)
+        n = options.get("numPartitions")
+        self.num_partitions = None if n is None else int(n)
+        if self.num_partitions is not None and self.num_partitions < 1:
+            raise ValueError(f"numPartitions must be >= 1, got {n!r}")
         self._filters: list[Filter] = []
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
@@ -207,20 +242,20 @@ class BtrBlocksReader(DataSourceReader):
         self._filters = supported
 
     def partitions(self):
-        files = sorted(
-            os.path.join(self.data_dir, f)
-            for f in os.listdir(self.data_dir)
-            if f.endswith(".parquet")
-        )
+        files = list_parquet_files(self.data_dir)
         if self._filters:
             files = [p for p in files if _file_may_match(p, self._filters)]
-        return [ChunkFilePartition(p, self.columns, self.groups) for p in files]
+        n_bins = self.num_partitions or len(files)
+        return [
+            ChunkFilePartition(b, self.columns, self.groups)
+            for b in _pack_files(files, n_bins)
+        ]
 
     def read(self, partition: ChunkFilePartition):
         if partition is None:  # Spark passes None when partitions() was empty
             return
         yield from _read_batches_reconstructed(
-            partition.file_path, partition.columns, partition.groups
+            partition.files, partition.columns, partition.groups
         )
 
 
@@ -231,8 +266,8 @@ class BtrBlocksStreamReader(DataSourceStreamReader):
     The format is stream-friendly by construction: chunks are immutable
     append-only files (SURVEY.md §7), so a streaming offset is simply "the
     set of chunk files seen so far". Each microbatch plans one
-    InputPartition per NEW chunk file — scan parallelism = newly appended
-    chunks, the same per-chunk task shape as the batch reader.
+    InputPartition per NEW chunk file (offsets are per file, so partitions
+    stay per file too).
 
     Offsets embed the sorted processed-file list, making
     ``partitions(start, end)`` a pure set difference — deterministic replay
@@ -247,9 +282,10 @@ class BtrBlocksStreamReader(DataSourceStreamReader):
         self.groups = _groups_payload(options["path"], self.columns)
 
     def _list_files(self) -> list:
-        return sorted(
-            f for f in os.listdir(self.data_dir) if f.endswith(".parquet")
-        )
+        return [
+            os.path.relpath(f, self.data_dir)
+            for f in list_parquet_files(self.data_dir)
+        ]
 
     def initialOffset(self) -> dict:  # noqa: N802 (API name)
         return {"files": []}
@@ -261,7 +297,7 @@ class BtrBlocksStreamReader(DataSourceStreamReader):
         new = sorted(set(end["files"]) - set(start["files"]))
         return [
             ChunkFilePartition(
-                os.path.join(self.data_dir, f), self.columns, self.groups
+                (os.path.join(self.data_dir, f),), self.columns, self.groups
             )
             for f in new
         ]
@@ -271,8 +307,9 @@ class BtrBlocksStreamReader(DataSourceStreamReader):
 
         if partition is None:
             return
+        (file_path,) = partition.files
         try:
-            pf = pq.ParquetFile(partition.file_path)
+            pf = pq.ParquetFile(file_path)
         except FileNotFoundError:
             # A file captured in a checkpointed offset can legitimately
             # vanish before this task reads it: (a) a torn batch append's
@@ -287,7 +324,7 @@ class BtrBlocksStreamReader(DataSourceStreamReader):
             return
         del pf  # existence probed; the shared helper re-opens the file
         yield from _read_batches_reconstructed(
-            partition.file_path, partition.columns, partition.groups
+            partition.files, partition.columns, partition.groups
         )
 
     def commit(self, end: dict) -> None:
@@ -889,7 +926,12 @@ def load_btr_table(spark, table_dir: str):
     from btrblocks_spark.tables import session_memo
 
     def _load():
-        return spark.read.format("btrblocks").option("path", table_dir).load()
+        return (
+            spark.read.format("btrblocks")
+            .option("path", table_dir)
+            .option("numPartitions", spark.sparkContext.defaultParallelism)
+            .load()
+        )
 
     local = _local_path(table_dir)
     if local is None:

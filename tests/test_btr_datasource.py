@@ -49,25 +49,56 @@ def test_filters_apply_correctly(spark, written_orders):
         assert back.filter(cond).count() == src.filter(cond).count(), cond
 
 
+def _files_of(parts) -> list:
+    return [f for p in parts for f in p.files]
+
+
 def test_partitions_are_chunk_files(spark, written_orders):
+    """Every chunk file lands in exactly one partition; without
+    numPartitions each file is its own partition, with it the reader packs
+    the files into min(files, numPartitions) partitions."""
+    import os
+
     path, src = written_orders
-    r = BtrBlocksReader({"path": path}, [f.name for f in src.schema.fields])
-    parts = r.partitions()
-    # block_size=256: one partition per chunk file
-    assert len(parts) >= src.count() // 256
+    cols = [f.name for f in src.schema.fields]
+    data = os.path.join(path, "data")
+    want = sorted(
+        os.path.join(data, f) for f in os.listdir(data) if f.endswith(".parquet")
+    )
+    # block_size=256: at least one chunk file per 256 rows
+    assert len(want) >= src.count() // 256 >= 3
+
+    parts = BtrBlocksReader({"path": path}, cols).partitions()
+    assert sorted(_files_of(parts)) == want
+    assert len(parts) == len(want)
+
+    for n in (1, 2, 3, len(want) + 5):
+        r = BtrBlocksReader({"path": path, "numPartitions": str(n)}, cols)
+        parts = r.partitions()
+        assert len(parts) == min(len(want), n)
+        assert sorted(_files_of(parts)) == want  # each file exactly once
+    with pytest.raises(ValueError, match="numPartitions"):
+        BtrBlocksReader({"path": path, "numPartitions": "0"}, cols)
 
 
 def test_footer_stats_prune_chunk_files(spark, written_orders):
     path, src = written_orders
     r = BtrBlocksReader({"path": path}, [f.name for f in src.schema.fields])
-    n_all = len(r.partitions())
+    n_all = len(_files_of(r.partitions()))
 
     # data is written sorted by o_orderkey → a point filter on it must
     # exclude almost every chunk file via footer min/max
     unhandled = list(r.pushFilters([EqualTo(("o_orderkey",), 37)]))
     assert len(unhandled) == 1  # every filter handed back for re-apply
-    n_point = len(r.partitions())
+    n_point = len(_files_of(r.partitions()))
     assert n_point <= 2 < n_all
+
+    # packing happens after pruning: the kept files, not all files
+    packed = BtrBlocksReader(
+        {"path": path, "numPartitions": "2"}, [f.name for f in src.schema.fields]
+    )
+    list(packed.pushFilters([EqualTo(("o_orderkey",), 37)]))
+    assert len(_files_of(packed.partitions())) == n_point
 
     r2 = BtrBlocksReader({"path": path}, [f.name for f in src.schema.fields])
     list(r2.pushFilters([GreaterThan(("o_orderkey",), int(1e12))]))
@@ -76,6 +107,28 @@ def test_footer_stats_prune_chunk_files(spark, written_orders):
     r3 = BtrBlocksReader({"path": path}, [f.name for f in src.schema.fields])
     list(r3.pushFilters([LessThan(("o_orderkey",), -1)]))
     assert len(r3.partitions()) == 0
+
+
+def test_load_btr_table_packs_one_partition_per_core(spark, sf_dir, tmp_path):
+    """A table with more chunk files than cores loads through
+    load_btr_table as exactly defaultParallelism scan partitions, and the
+    packed read round-trips exactly."""
+    import os
+
+    from btrblocks_spark.sources.btr_datasource import load_btr_table
+
+    src = load_table(spark, sf_dir, "orders")
+    out = str(tmp_path / "packed")
+    write_table(src, out, ["o_orderkey"], config=DEFAULT_CONFIG.with_(block_size=64))
+    spark.dataSource.register(BtrBlocksDataSource)
+    cores = spark.sparkContext.defaultParallelism
+    n_files = sum(f.endswith(".parquet") for f in os.listdir(out + "/data"))
+    assert n_files > cores
+
+    back = load_btr_table(spark, out)
+    assert back.rdd.getNumPartitions() == cores
+    assert back.count() == src.count()
+    assert back.exceptAll(src).isEmpty() and src.exceptAll(back).isEmpty()
 
 
 def test_pruned_read_still_correct(spark, written_orders):

@@ -2344,6 +2344,31 @@ def test_column_group_compression_banked(spark, sf_dir, tmp_path):
     )
 
 
+def test_plan_kernel_groups_chunks_in_arrival_order():
+    """A read partition holding several whole chunk files can hand the plan
+    kernel a batch with the tail of chunk 7 and then chunk 3: the kernel
+    must still emit exactly one plan row per (column, chunk), each with
+    the chunk's full row count."""
+    import pandas as pd
+
+    from btrblocks_spark.format.writer import _plan_partition_fn
+
+    def rows(chunk, lo, hi):
+        return pd.DataFrame(
+            {"v": list(range(lo, hi)), "s": [f"k{i % 3}" for i in range(lo, hi)],
+             "_chunk": [chunk] * (hi - lo)}
+        )
+
+    c7a, c7b, c3 = rows(7, 0, 5), rows(7, 5, 8), rows(3, 100, 104)
+    kernel = _plan_partition_fn([("v", "bigint"), ("s", "string")], DEFAULT_CONFIG)
+    out = pd.concat(
+        list(kernel([c7a, pd.concat([c7b, c3], ignore_index=True)])),
+        ignore_index=True,
+    )
+    got = sorted(zip(out["column"], out["chunk"], out["n_rows"]))
+    assert got == [("s", 3, 4), ("s", 7, 8), ("v", 3, 4), ("v", 7, 8)]
+
+
 def test_concurrent_write_table_plan_isolation(spark, sf_dir, tmp_path):
     """Two write_table calls running CONCURRENTLY (the bench's staging
     overlap, guide §2.6) must not interleave the session-global

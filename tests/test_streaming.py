@@ -1124,7 +1124,7 @@ def test_stream_reader_tolerates_vanished_offset_file(spark, tmpdir):
     table = os.path.join(tmpdir, "van_tbl")
     os.makedirs(os.path.join(table, "data"))
     r = BtrBlocksStreamReader({"path": table}, ["k"])
-    part = ChunkFilePartition(os.path.join(table, "data", "gone.parquet"), ("k",))
+    part = ChunkFilePartition((os.path.join(table, "data", "gone.parquet"),), ("k",))
     assert list(r.read(part)) == []
 
 
